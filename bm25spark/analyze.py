@@ -490,7 +490,3 @@ def analyze_query(
     dedup at src/datatype/tsvector.rs:96-105 — query frequencies are
     discarded)."""
     return sorted({intern_str(seed, tok) for tok in analyzer(text)})
-
-
-def term_keys(seed: bytes, tokens: Iterable[str]) -> list[bytes]:
-    return [intern_str(seed, t) for t in tokens]

@@ -98,25 +98,6 @@ def _resolve_cfg(
     return cfg
 
 
-def tokenize_df(
-    df: DataFrame,
-    text_col: str = "text",
-    analyzer: str | None = None,
-    cfg: Bm25Config | None = None,
-) -> DataFrame:
-    """The reference's ``tokenize(text, tokenizer)::bm25vector``
-    surface (README.md:54-56): adds a ``terms`` column — the sparse
-    document vector as a sorted array<struct<key:binary, tf:int>>,
-    token ids interned exactly like the index build — plus the
-    summed ``doc_len``. One Arrow-batched UDF; NULL text rows are
-    dropped like the build's NULL skip. ``analyzer`` defaults to
-    english when neither it nor ``cfg`` is given."""
-    from .udfs import with_doc_terms
-
-    cfg = _resolve_cfg(analyzer, cfg, "english")
-    return with_doc_terms(df, text_col, cfg.analyzer, cfg.seed)
-
-
 def tokenize_mappings_df(
     df: DataFrame,
     text_col: str = "text",

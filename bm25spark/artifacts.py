@@ -112,18 +112,3 @@ def read_fieldnorms(docs_path: str, n_docs: int, shards: list[int] | None = None
     ids = np.asarray(t["doc_id"])
     arr[ids] = np.asarray(t["fieldnorm"]).astype(np.uint8)
     return arr
-
-
-def read_payloads(docs_path: str, doc_ids: list[int], payload_cols: list[str]):
-    """-> {doc_id: (payload tuple)}"""
-    if not doc_ids:
-        return {}
-    d = ds.dataset(docs_path, format="parquet")
-    cols = ["doc_id"] + [f"p_{c}" for c in payload_cols]
-    t = d.to_table(columns=cols, filter=pc.field("doc_id").isin(doc_ids))
-    out = {}
-    for i in range(t.num_rows):
-        out[t["doc_id"][i].as_py()] = tuple(
-            t[f"p_{c}"][i].as_py() for c in payload_cols
-        )
-    return out

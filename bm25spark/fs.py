@@ -111,12 +111,6 @@ def read_text(path: str) -> str:
         return f.read().decode("utf-8")
 
 
-def write_text(path: str, text: str) -> None:
-    fs, p = resolve(path)
-    with fs.open_output_stream(p) as f:
-        f.write(text.encode("utf-8"))
-
-
 def write_text_atomic(path: str, text: str) -> None:
     """Publish a small control file atomically (see module docstring
     for the per-backend mechanism). The temp name is unique per

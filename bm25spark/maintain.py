@@ -27,9 +27,11 @@ maintain.rs:27-311):
   lives, not on the driver.
 - ``vacuum``   compacts: drops tombstoned docs, relabels survivors to
   dense ids (the reference's relabel array, maintain.rs:330-362 — here
-  the J4 relabel *join*), tokenizes and appends delta docs, re-runs the
-  build's sort+flush stages, and atomically swaps the artifact dirs
-  (publish-last, like build.rs:60-70).
+  ``old_id − #tombstones below it``), re-reads the surviving postings
+  from the postings artifact (the index keeps no forward table, like
+  the reference), tokenizes and appends delta docs, re-runs the
+  build's sort+flush stage on the merged stream, and atomically swaps
+  the artifact dirs (publish-last, like build.rs:60-70).
 - ``maybe_vacuum`` is the auto-seal policy: vacuum once the live delta
   exceeds a row threshold — the analogue of the reference's
   ``bm25.segment_growing_max_page_size`` GUC (README.md:466: growing
@@ -42,15 +44,21 @@ import json
 import os
 import time
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import fs as fsio
+from . import packing
 from .analyze import analyze_query, get_analyzer
 from .build import (
     _assign_doc_ids,
+    _doc_terms,
     _ensure_readable_parquet,
     _fieldnorm_expr,
+    _s16_keys,
     finalize_index,
 )
 from .config import Bm25Config
@@ -62,6 +70,17 @@ from .udfs import with_doc_terms
 #: the reference seals growing segments at 4,096 pages (README.md:466);
 #: rows are our page analogue.
 DEFAULT_MAX_DELTA_ROWS = 4096
+
+#: the block kernel's doc-grouped input layout (build._doc_terms)
+_DOC_TERMS_ARROW = pa.schema(
+    [
+        ("tkeys", pa.list_(pa.binary())),
+        ("ttfs", pa.list_(pa.int32())),
+        ("shard", pa.int32()),
+        ("local_id", pa.int32()),
+        ("fieldnorm", pa.int32()),
+    ]
+)
 
 
 def _gen_of(meta: dict) -> int:
@@ -970,17 +989,18 @@ def _vacuum_locked(
     fsio.mkdirs(work)
 
     # --- survivors of the sealed segment, relabeled densely (J4) ---
-    sealed = idx.docs_df()
     tp = _tomb_path(index_dir, old_gen)
-    if fsio.exists(tp):
-        sealed = sealed.join(
-            spark.read.parquet(tp).distinct(), "doc_id", "left_anti"
-        )
+    tombs = (
+        spark.read.parquet(tp).select(F.col("doc_id").cast("long")).distinct()
+        if fsio.exists(tp)
+        else spark.createDataFrame([], "doc_id BIGINT")
+    )
+    sealed = idx.docs_df().join(tombs, "doc_id", "left_anti")
     sealed = sealed.withColumnRenamed("doc_id", "old_id")
     parts = max(spark.sparkContext.defaultParallelism, 8)
     relabeled = _assign_doc_ids(spark, sealed, ["old_id"], parts, pin_output=True)
-    relabeled.persist()
     n_sealed = relabeled.count()
+    doc_terms = _surviving_doc_terms(idx, tombs, cfg.shard_size)
 
     # --- delta docs: tokenize, ids after the sealed block ---
     delta = _live_delta(spark, idx, index_dir)
@@ -993,26 +1013,21 @@ def _vacuum_locked(
         ).withColumn(
             "_iid", F.col("_iid") + F.lit(n_sealed)
         )
-        dass = dass.withColumn("content_sha256", F.sha2(F.col(text_col), 256))
-        fn_expr = _fieldnorm_expr()
+        dass = dass.withColumn(
+            "content_sha256", F.sha2(F.col(text_col), 256)
+        ).withColumn("fieldnorm", _fieldnorm_expr())
         delta_docs = dass.select(
             F.col("_iid").alias("doc_id"),
             F.col("doc_len").cast("long").alias("doc_len"),
-            fn_expr.alias("fieldnorm"),
+            "fieldnorm",
             "content_sha256",
             *[F.col(c).alias(f"p_{c}") for c in pc],
         )
-        delta_maps = dass.select(
-            F.col("_iid").alias("gid"), F.explode("terms").alias("t")
-        ).select(
-            F.col("t.key").alias("term_key"),
-            "gid",
-            F.col("t.tf").alias("tf"),
-        )
+        doc_terms = doc_terms.unionByName(_doc_terms(dass, cfg.shard_size))
     else:
-        delta_docs = delta_maps = None
+        delta_docs = None
 
-    # --- new docs artifact ---
+    # --- new docs artifact (the build's column layout) ---
     new_docs = relabeled.select(
         F.col("_iid").alias("doc_id"),
         "doc_len",
@@ -1022,61 +1037,22 @@ def _vacuum_locked(
     )
     if delta_docs is not None:
         new_docs = new_docs.unionByName(delta_docs)
-    new_docs = new_docs.withColumn(
-        "shard", (F.col("doc_id") / cfg.shard_size).cast("int")
-    ).withColumn("local_id", (F.col("doc_id") % cfg.shard_size).cast("long"))
+    new_docs = new_docs.select(
+        "doc_id",
+        (F.col("doc_id") / cfg.shard_size).cast("int").alias("shard"),
+        (F.col("doc_id") % cfg.shard_size).cast("int").alias("local_id"),
+        "doc_len",
+        "fieldnorm",
+        "content_sha256",
+        *[f"p_{c}" for c in pc],
+    )
     new_docs.repartitionByRange(max(1, parts // 4), "doc_id").sortWithinPartitions(
         "doc_id"
     ).write.parquet(fsio.join(work, "docs"))
     _ensure_readable_parquet(fsio.join(work, "docs"), new_docs.schema)
 
-    # --- new mappings: sealed relabel join ∪ delta ---
-    old_maps = spark.read.parquet(idx._path("mappings"))
-    if "tkeys" in old_maps.columns:
-        # doc-grouped staging (r7 build layout): explode to the
-        # per-posting shape this join works in
-        old_maps = (
-            old_maps.withColumn(
-                "gid",
-                F.col("shard").cast("long") * cfg.shard_size
-                + F.col("local_id"),
-            )
-            .select("gid", F.explode(F.arrays_zip("tkeys", "ttfs")).alias("z"))
-            .select(
-                F.col("z.tkeys").alias("term_key"),
-                "gid",
-                F.col("z.ttfs").alias("tf"),
-            )
-        )
-    else:
-        old_maps = old_maps.withColumn(
-            "gid",
-            F.col("shard").cast("long") * cfg.shard_size + F.col("local_id"),
-        )
-    relabel_map = relabeled.select(
-        F.col("old_id").alias("gid"), F.col("_iid").alias("new_gid")
-    )
-    new_maps = (
-        old_maps.join(relabel_map, "gid")  # inner join drops tombstoned
-        .select("term_key", F.col("new_gid").alias("gid"), "tf")
-    )
-    if delta_maps is not None:
-        new_maps = new_maps.unionByName(delta_maps)
-    fns = spark.read.parquet(fsio.join(work, "docs")).select(
-        F.col("doc_id").alias("gid"), "fieldnorm"
-    )
-    vm = new_maps.join(fns, "gid").select(
-        "term_key",
-        (F.col("gid") / cfg.shard_size).cast("int").alias("shard"),
-        (F.col("gid") % cfg.shard_size).cast("long").alias("local_id"),
-        "tf",
-        "fieldnorm",
-    )
-    vm.write.parquet(fsio.join(work, "mappings"))
-    _ensure_readable_parquet(fsio.join(work, "mappings"), vm.schema)
-    relabeled.unpersist()
-
-    finalize_index(spark, work, cfg, pc)
+    # --- postings: surviving sealed ∪ delta through the build's kernel ---
+    finalize_index(spark, work, cfg, pc, doc_terms_df=doc_terms)
 
     # --- versioned publish (publish-last) ---
     import json as _json
@@ -1127,6 +1103,92 @@ def _vacuum_locked(
         fsio.join(index_dir, "meta.json"), _json.dumps(new_meta, indent=2)
     )
     return index_dir
+
+
+def _surviving_doc_terms(
+    idx: Bm25Index, tombs: DataFrame, shard_size: int
+) -> DataFrame:
+    """The sealed segment's surviving postings in the block kernel's
+    doc-grouped input layout (tkeys, ttfs, shard, local_id, fieldnorm),
+    relabeled to the ids vacuum gives the survivors: their dense rank in
+    old-id order, ``old_id − #tombstones below it``.
+
+    The index keeps no forward (doc -> terms) table, so the postings
+    come from the postings artifact itself, as the reference's vacuum
+    re-reads each segment's postings (maintain.rs:27-311). One task per
+    old shard batch-decodes that shard's blocks, drops its tombstoned
+    ids (the shard's tombstones arrive through a cogroup, O(tombstones)
+    rows), shifts each survivor down by the tombstones below it (a
+    driver-side prefix, one count per shard, plus a searchsorted within
+    the shard), regroups the postings by document and attaches each
+    document's fieldnorm from the old docs artifact. ``tombs`` holds
+    distinct tombstoned ``doc_id`` values."""
+    from .distributed import _shard_fieldnorms
+
+    tombs = tombs.select(
+        (F.col("doc_id") / shard_size).cast("int").alias("shard"), "doc_id"
+    )
+    per_shard = sorted(tombs.groupBy("shard").count().collect())
+    t_shards = np.array([r[0] for r in per_shard], dtype=np.int64)
+    t_before = np.concatenate(([0], np.cumsum([r[1] for r in per_shard])))
+    docs_path = idx._path("docs")
+
+    def relabel(key, blocks, dead):
+        shard = key[0].as_py()
+        base = shard * shard_size
+        if blocks.num_rows == 0:
+            return _DOC_TERMS_ARROW.empty_table()
+        counts = blocks["count"].to_numpy().astype(np.int64)
+        id_parts = packing.decompress_blocks_batch(
+            blocks["ids_meta"].to_numpy(),
+            blocks["ids_bytes"].to_pylist(),
+            counts,
+            bases=blocks["min_doc"].to_numpy() - base,
+        )
+        tf_parts = packing.decompress_blocks_batch(
+            blocks["tfs_meta"].to_numpy(), blocks["tfs_bytes"].to_pylist(), counts
+        )
+        lids = np.concatenate([p[:c] for p, c in zip(id_parts, counts)]).astype(
+            np.int64
+        )
+        tfs = np.concatenate([p[:c] for p, c in zip(tf_parts, counts)])
+        keys = np.repeat(_s16_keys(blocks["term_key"].combine_chunks()), counts)
+        dead_l = np.unique(dead["doc_id"].to_numpy().astype(np.int64) - base)
+        live = ~np.isin(lids, dead_l)
+        lids, tfs, keys = lids[live], tfs[live], keys[live]
+        below = t_before[np.searchsorted(t_shards, shard)]
+        new_ids = base - below + lids - np.searchsorted(dead_l, lids)
+        fns = _shard_fieldnorms(docs_path, shard, shard_size).arr[lids]
+        order = np.argsort(new_ids, kind="stable")
+        new_ids, tfs, keys, fns = new_ids[order], tfs[order], keys[order], fns[order]
+        # ids are >= 0, so prepend=-1 starts the first document; a shard
+        # whose every posting is tombstoned yields no starts, no rows
+        starts = np.flatnonzero(np.diff(new_ids, prepend=-1))
+        offsets = pa.array(np.r_[starts, len(new_ids)].astype(np.int32))
+        flat_keys = pa.FixedSizeBinaryArray.from_buffers(
+            pa.binary(16), len(keys), [None, pa.py_buffer(keys.tobytes())]
+        ).cast(pa.binary())
+        doc_ids = new_ids[starts]
+        return pa.table(
+            [
+                pa.ListArray.from_arrays(offsets, flat_keys),
+                pa.ListArray.from_arrays(offsets, pa.array(tfs.astype(np.int32))),
+                pa.array((doc_ids // shard_size).astype(np.int32)),
+                pa.array((doc_ids % shard_size).astype(np.int32)),
+                pa.array(fns[starts].astype(np.int32)),
+            ],
+            schema=_DOC_TERMS_ARROW,
+        )
+
+    blocks = idx.postings_df().select(
+        "shard", "term_key", "min_doc", "count",
+        "ids_meta", "ids_bytes", "tfs_meta", "tfs_bytes",
+    )
+    return (
+        blocks.groupBy("shard")
+        .cogroup(tombs.groupBy("shard"))
+        .applyInArrow(relabel, from_arrow_schema(_DOC_TERMS_ARROW))
+    )
 
 
 def _delta_topk_batch_df(

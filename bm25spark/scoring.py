@@ -69,10 +69,3 @@ def wand_max(
     scores = tf_score(fieldnorms, tfs, k1, b, avgdl)
     i = int(np.argmax(scores))  # first max = reference's strict-< update order
     return int(fieldnorms[i]), int(tfs[i])
-
-
-def merge_wand(a: tuple[float, int, int], b: tuple[float, int, int]):
-    """Wand::extend monoid on (score, fieldnorm, tf) triples
-    (bm25.rs:319-325): keep the side with strictly greater score,
-    preferring the left on ties (left-fold order = reference order)."""
-    return b if a[0] < b[0] else a

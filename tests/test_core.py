@@ -52,6 +52,26 @@ class TestFieldnorm:
         assert length_to_fieldnorm(43) == 41
         assert fieldnorm_to_length(length_to_fieldnorm(100)) <= 100
 
+    def test_catalyst_expr_matches_at_table_boundaries(self, spark):
+        from bm25spark.build import _fieldnorm_expr
+
+        lens = sorted(
+            {
+                v
+                for t in FIELDNORM_TO_LENGTH.tolist()
+                for v in (t - 1, t, t + 1)
+                if 0 <= v < 2**31
+            }
+        )
+        df = spark.createDataFrame([(v,) for v in lens], "doc_len INT")
+        got = {
+            r.doc_len: r.fn
+            for r in df.select("doc_len", _fieldnorm_expr().alias("fn")).collect()
+        }
+        assert len(got) == len(lens)
+        for v in lens:
+            assert got[v] == int(length_to_fieldnorm(v)), v
+
     @given(st.integers(min_value=0, max_value=2**31))
     def test_roundtrip_property(self, n):
         fn = int(length_to_fieldnorm(n))
